@@ -51,11 +51,25 @@ class _PartitionTimingParam:
         return a
 
 
+class PartitionCountParam:
+    """AccumulatorParam summing {partition_id: count} — the decode
+    UDF's per-partition triple count (see extract_triples_with_metrics)."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        for k, n in b.items():
+            a[k] = a.get(k, 0) + n
+        return a
+
+
 def _decode_batches(batches: Iterator[pd.DataFrame],
                     from_html: bool,
                     with_partition: bool,
                     timing_acc=None,
-                    weights_bc=None) -> Iterator[pd.DataFrame]:
+                    weights_bc=None,
+                    triples_acc=None) -> Iterator[pd.DataFrame]:
     # imports inside the UDF: executed on the executor python worker
     import time as _time
     from dygiepp_spark.kernel.model import triples_rows
@@ -70,6 +84,7 @@ def _decode_batches(batches: Iterator[pd.DataFrame],
     for pdf in batches:
         rows: list[tuple] = []
         timing: dict[int, tuple[int, float, int]] = {}
+        counts: dict[int, int] = {}
         if from_html:
             texts = [extract_text(h) for h in pdf["html"]]
         else:
@@ -86,10 +101,13 @@ def _decode_batches(batches: Iterator[pd.DataFrame],
                 n0, s0, tr0 = timing.get(pid, (0, 0.0, 0))
                 timing[pid] = (n0 + 1, s0 + dt,
                                tr0 + int(meta.get("truncated", False)))
+                counts[pid] = counts.get(pid, 0) + len(doc_rows)
             else:
                 rows.extend(doc_rows)
         if timing_acc is not None and timing:
             timing_acc.add(timing)
+        if triples_acc is not None and counts:
+            triples_acc.add(counts)
         yield pd.DataFrame(rows, columns=cols)
 
 
@@ -131,21 +149,28 @@ def extract_triples(pages: DataFrame, from_html: bool = True,
 
 def extract_triples_with_metrics(pages: DataFrame,
                                  from_html: bool = True,
-                                 weights_bc=None):
+                                 weights_bc=None,
+                                 triples_acc=None):
     """Like extract_triples(with_partition=True) but also returns a
     per-partition timing accumulator: after an action on the returned
     DataFrame, `acc.value` is {partition_id: (n_docs, decode_secs,
     n_truncated)} — measured inside the UDF, the honest A5 docs/sec
     per WARC partition, plus the count of documents cut at
     MAX_DOC_TOKENS (a silent cut would be undebuggable at crawl
-    scale). Returns (triples_df, accumulator)."""
+    scale). `triples_acc`, an optional accumulator built with
+    PartitionCountParam, additionally receives {partition_id:
+    n_triples} for the rows the UDF emits. Returns (triples_df, acc).
+
+    The counts are exact when the UDF runs once per partition: in the
+    result stage of a single action (see run_extraction)."""
     spark = pages.sparkSession
     acc = spark.sparkContext.accumulator({}, _PartitionTimingParam())
     in_cols = ["url", "html" if from_html else "text", "partition_id"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _decode_batches(batches, from_html, True, timing_acc=acc,
-                               weights_bc=weights_bc)
+                               weights_bc=weights_bc,
+                               triples_acc=triples_acc)
 
     return (pages.select(*in_cols)
             .mapInPandas(fn, TRIPLE_SCHEMA_PART), acc)

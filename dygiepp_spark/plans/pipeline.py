@@ -34,13 +34,16 @@ def _lineage_path(out_dir: str) -> str:
 
 
 def completed_partitions(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Partitions already marked done in the lineage commit log."""
+    """Partitions already marked done in the lineage commit log. A
+    missing log means nothing is done; a log that exists but cannot be
+    read fails the run (silently recomputing every partition would
+    hide the damage)."""
+    from dygiepp_spark.sources.catalog import path_exists
     path = _lineage_path(out_dir)
-    try:
-        lin = spark.read.parquet(path)
-    except Exception:
+    if not path_exists(spark, path):
         return spark.createDataFrame([], "partition_id int")
-    return (lin.filter(F.col("status") == "done")
+    return (spark.read.parquet(path)
+            .filter(F.col("status") == "done")
             .select("partition_id").distinct())
 
 
@@ -53,8 +56,19 @@ def run_extraction(spark: SparkSession, sf_dir: str, out_dir: str,
     lineage append. Returns run metrics. Skips partitions already
     marked done when resume=True. `weights_archive` points at a
     model.tar.gz (S2): broadcast once, decode runs with those weights
-    instead of the seed fixture."""
-    from dygiepp_spark.operators.extract import extract_triples
+    instead of the seed fixture.
+
+    One job decodes the pages and writes the triples. The lineage
+    (per-partition n_docs, n_triples, decode docs/sec, n_truncated)
+    comes from the decode UDF's accumulators, filled within that job;
+    there is no count before it and no read-back after it. The
+    lineage frame is built from pandas (Arrow, a local relation)."""
+    import pandas as pd
+    from pyspark.sql import Observation
+
+    from dygiepp_spark.operators.extract import (
+        PartitionCountParam, extract_triples_with_metrics)
+    from dygiepp_spark.sources.catalog import write_table
     from dygiepp_spark.sources.pages import synth_pages
 
     run_id = uuid.uuid4().hex[:12]
@@ -71,64 +85,60 @@ def run_extraction(spark: SparkSession, sf_dir: str, out_dir: str,
         # inputs arrive in thousands of splits and skip this shuffle.
         pages = pages.repartition(parallelism, "url")
 
-    n_docs = pages.count()
-    if n_docs == 0:
-        return {"run_id": run_id, "n_docs": 0, "n_triples": 0,
-                "elapsed_sec": 0.0, "partitions": []}
-
     t0 = time.time()
-    from dygiepp_spark.operators.extract import extract_triples_with_metrics
+    triples_acc = spark.sparkContext.accumulator({}, PartitionCountParam())
     triples, timing_acc = extract_triples_with_metrics(
-        pages, from_html=True, weights_bc=weights_bc)
+        pages, from_html=True, weights_bc=weights_bc,
+        triples_acc=triples_acc)
     # A5: observe() rides the write action — global metrics with no
     # second pass over the data (SURVEY.md §2.4 A5).
-    from pyspark.sql import Observation
     obs = Observation("kg_extraction")
-    triples = triples.observe(
-        obs, F.count(F.lit(1)).alias("n_triples"),
-        F.approx_count_distinct("url").alias("n_docs_approx"))
-    from dygiepp_spark.sources.catalog import write_table
+    triples = triples.observe(obs, F.count(F.lit(1)).alias("n_triples"))
     write_table(triples, os.path.join(out_dir, "triples"),
                 partition_by=["partition_id"],
                 mode="overwrite_partitions")
     elapsed = time.time() - t0
-    observed = obs.get
 
-    written = spark.read.parquet(os.path.join(out_dir, "triples"))
-    pages_per_part = (pages.groupBy("partition_id")
-                      .agg(F.count(F.lit(1)).alias("n_docs")))
-    stats = (written.groupBy("partition_id")
-             .agg(F.count(F.lit(1)).alias("n_triples"))
-             .join(pages_per_part, "partition_id", "right")
-             .select("partition_id",
-                     F.col("n_docs").cast("bigint"),
-                     F.coalesce("n_triples", F.lit(0)).cast("bigint")
-                     .alias("n_triples"))
-             .collect())
+    # The accumulators are exact: the UDF runs in the result stage of
+    # the write action, and the DAGScheduler applies a result task's
+    # accumulator updates once per partition and drops the updates of
+    # failed attempts. The Observation cross-checks that below.
+    per_part = timing_acc.value
+    n_docs = sum(n for n, _, _ in per_part.values())
+    if n_docs == 0:
+        return {"run_id": run_id, "n_docs": 0, "n_triples": 0,
+                "elapsed_sec": 0.0, "partitions": []}
+    triples_per_part = triples_acc.value
+    n_triples = sum(triples_per_part.values())
+    observed = int(obs.get["n_triples"])
+    if observed != n_triples:
+        raise RuntimeError(
+            f"run_extraction: the write observed {observed} triples but "
+            f"the decode accumulator counted {n_triples}; the decode ran "
+            f"more than once per partition, so its lineage would be wrong")
+
     docs_per_sec = n_docs / elapsed if elapsed > 0 else 0.0
-    # per-partition decode rate measured INSIDE the UDF (accumulator);
-    # falls back to the run-level rate for partitions with no sample
-    per_part = timing_acc.value or {}
-    def _rate(pid: int) -> float:
-        n, s, _t = per_part.get(pid, (0, 0.0, 0))
-        return (n / s) if s > 0 else docs_per_sec
-    def _trunc(pid: int) -> int:
-        return per_part.get(pid, (0, 0.0, 0))[2]
-    lineage_rows = [
-        (int(r.partition_id), int(r.n_docs), int(r.n_triples),
-         float(_rate(int(r.partition_id))),
-         int(_trunc(int(r.partition_id))), "done", run_id)
-        for r in stats
-    ]
-    from dygiepp_spark.sources.catalog import write_table as _wt
-    _wt(spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1),
-        _lineage_path(out_dir), mode="append")
+    # per-partition decode rate measured INSIDE the UDF; falls back to
+    # the run-level rate for a partition with no timing sample
+    pids = sorted(per_part)
+    lineage = pd.DataFrame({
+        "partition_id": pids,
+        "n_docs": [per_part[p][0] for p in pids],
+        "n_triples": [triples_per_part.get(p, 0) for p in pids],
+        "docs_per_sec": [per_part[p][0] / per_part[p][1]
+                         if per_part[p][1] > 0 else docs_per_sec
+                         for p in pids],
+        "n_truncated": [per_part[p][2] for p in pids],
+        "status": "done",
+        "run_id": run_id,
+    })
+    write_table(spark.createDataFrame(lineage, LINEAGE_SCHEMA),
+                _lineage_path(out_dir), mode="append")
 
-    n_triples = sum(r.n_triples for r in stats)
     return {"run_id": run_id, "n_docs": n_docs, "n_triples": n_triples,
-            "observed_n_triples": int(observed["n_triples"]),
+            "observed_n_triples": observed,
             "elapsed_sec": elapsed, "docs_per_sec": docs_per_sec,
-            "partitions": [r.partition_id for r in stats]}
+            "partitions": pids}
 
 
 def build_graph(spark: SparkSession, triples: DataFrame,

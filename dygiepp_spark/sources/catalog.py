@@ -12,19 +12,33 @@ here, REPLACE PARTITIONS there).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
+
+# SparkContext -> iceberg_available answer; the answer depends only on
+# the JVM classpath and the static SparkConf, both fixed per context
+_ICEBERG: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is on the classpath + configured."""
+    """True when an Iceberg catalog is on the classpath + configured.
+    Memoized per SparkContext: the classpath probe throws (and
+    catches) a Py4J ClassNotFoundException, 20-30 ms per call."""
+    sc = spark.sparkContext
+    if sc not in _ICEBERG:
+        _ICEBERG[sc] = _probe_iceberg(sc)
+    return _ICEBERG[sc]
+
+
+def _probe_iceberg(sc) -> bool:
     try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName(
+        sc._jvm.java.lang.Class.forName(
             "org.apache.iceberg.spark.SparkCatalog")
     except Exception:
         return False
-    confs = spark.sparkContext.getConf().getAll()
-    return any(k.startswith("spark.sql.catalog.") for k, _ in confs)
+    return any(k.startswith("spark.sql.catalog.")
+               for k, _ in sc.getConf().getAll())
 
 
 def write_table(df: DataFrame, target: str,
@@ -49,8 +63,9 @@ def write_table(df: DataFrame, target: str,
                       else mode)
     if partition_by:
         if mode == "overwrite_partitions":
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           "dynamic")
+            # a writer option, not a session conf: the session setting
+            # would turn every later static overwrite dynamic
+            w = w.option("partitionOverwriteMode", "dynamic")
         w = w.partitionBy(*partition_by)
     w.parquet(target)
 
@@ -95,15 +110,23 @@ def compact_table(spark: SparkSession, src: str, dst: str,
             "out_files": out_files}
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path` — scheme-agnostic
+    (file://, hdfs://, s3a://), unlike a driver-local os.path check
+    which silently sees nothing on distributed storage."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs_path(spark, path)
+    return bool(fs.exists(p))
+
+
 def _list_parquet(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_files, total_bytes) of *.parquet under `path`, via the
-    Hadoop FileSystem API — scheme-agnostic (file://, hdfs://, s3a://),
-    unlike a driver-local glob which silently sees nothing on
-    distributed storage."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    Hadoop FileSystem API."""
+    fs, p = _fs_path(spark, path)
     if not fs.exists(p):
         return 0, 0
     n, total = 0, 0

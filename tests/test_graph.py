@@ -231,6 +231,58 @@ def test_lineage_per_partition_rates(spark, out_dir):
     assert len({round(v, 6) for v in rates.values()}) > 1
 
 
+def test_run_extraction_lineage_from_one_write_job(spark, out_dir):
+    """The lineage counts come from the decode accumulator within the
+    write job: per partition they equal the input pages and the written
+    triples, and the whole run launches at most 5 jobs (no count
+    before the write, no read-back after it)."""
+    from pyspark.sql import functions as F
+
+    from dygiepp_spark.plans.pipeline import run_extraction
+    from dygiepp_spark.sources.pages import synth_pages
+    from tests.conftest import SF_SMOKE as sf
+    sc = spark.sparkContext
+    sc.setJobGroup("extract-jobs", "extract-jobs")
+    try:
+        m = run_extraction(spark, sf, out_dir, resume=False,
+                           parallelism=8)
+    finally:
+        sc.setJobGroup("extract-other", "extract-other")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("extract-jobs"))
+    assert n_jobs <= 5, f"run_extraction launched {n_jobs} jobs"
+
+    written = spark.read.parquet(f"{out_dir}/triples")
+    n_written = written.count()
+    assert m["n_docs"] == 500
+    assert m["n_triples"] == n_written == m["observed_n_triples"] > 0
+
+    def per_part(df, col):
+        return {r.partition_id: r[col] for r in
+                df.groupBy("partition_id")
+                .agg(F.count(F.lit(1)).alias(col)).collect()}
+
+    lin = spark.read.parquet(f"{out_dir}/lineage").collect()
+    assert {r.partition_id: r.n_docs for r in lin} == \
+        per_part(synth_pages(spark, sf), "n_docs")
+    assert {r.partition_id: r.n_triples for r in lin} == \
+        per_part(written, "n_triples")
+    assert sorted(m["partitions"]) == sorted(r.partition_id for r in lin)
+
+
+def test_completed_partitions_fails_on_unreadable_lineage(spark, out_dir):
+    """A missing lineage log means nothing is done; one that exists
+    but cannot be read fails instead of recomputing everything."""
+    import os
+
+    from dygiepp_spark.plans.pipeline import completed_partitions
+    assert completed_partitions(spark, out_dir).count() == 0
+    os.makedirs(f"{out_dir}/lineage")
+    with open(f"{out_dir}/lineage/part-0.parquet", "w") as f:
+        f.write("not parquet")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        completed_partitions(spark, out_dir).count()
+
+
 def test_pagerank_matches_dense_power_iteration(spark):
     """Distributed PageRank == numpy dense power iteration with the
     same damping/dangling conventions, to 1e-9, on a hand-built graph

@@ -174,6 +174,29 @@ def test_compact_table_binpacks_small_files(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_write_table_partition_overwrite_does_not_leak(spark, tmp_path):
+    """overwrite_partitions is a writer option: the session conf is
+    unchanged afterwards, so a later static overwrite by any caller
+    still replaces every partition."""
+    from dygiepp_spark.sources.catalog import write_table
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    out = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "p int, v string")
+    write_table(df, out, partition_by=["p"], mode="overwrite_partitions")
+    write_table(spark.createDataFrame([(2, "c")], "p int, v string"), out,
+                partition_by=["p"], mode="overwrite_partitions")
+    assert spark.conf.get(key) == before
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert got == [("a", 1), ("c", 2)]
+
+    (spark.createDataFrame([(3, "d")], "p int, v string")
+     .write.mode("overwrite").partitionBy("p").parquet(out))
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert got == [("d", 3)]
+
+
 def test_round5_query_plans_have_no_quadratic_joins(spark):
     """Plan-shape guards for the round-5 pipeline queries: no
     cartesian / nested-loop join anywhere (decontamination and
